@@ -2,8 +2,8 @@
 
 Mirrors HanaToBQ's 10 Beam options (HanaToBQ.java:175-224) with the
 documented fixes: ``--end-time`` is honored (the reference declares
-but ignores it), timestamps are typed, and the lossy stringify /
-decimal-as-double behaviors are opt-in flags.  A ``--source-parquet``
+but ignores it), timestamps are typed, and the lossy stringify
+behavior is an opt-in flag.  A ``--source-parquet``
 path substitutes the JDBC source for local/lakehouse runs, and
 ``--state`` switches to checkpointed incremental mode (high-watermark
 CDC done right).
@@ -271,10 +271,13 @@ def main(argv: list[str] | None = None) -> int:
             range_clustered_write,
             zorder_clustered_write,
         )
+        from hana_bq_beam_connector_spark.typemap import stringify
 
         if config.dest_path is None:
             raise SystemExit("--cluster-by needs --dest-path")
         result, _ = run_copy_pipeline(spark, config, source_df=source)
+        if config.stringify:
+            result = stringify(result)
         cols = [c.strip() for c in args.cluster_by.split(",") if c.strip()]
         n = result.count()
         if len(cols) == 1:

@@ -10,52 +10,34 @@ Spark lifecycle equivalent: driver-side planning stays tiny Python
 lazy DataFrame so Catalyst fuses scan→filter→stringify→write into one
 shuffle-free stage — the pipeline is embarrassingly parallel and the
 physical plan must stay that way at 100 TB (no exchange in explain).
+One copy path: run_and_append and plans.incremental.incremental_copy
+are both :func:`run_copy_pipeline` then :func:`append_observed`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from hana_bq_beam_connector_spark.colutil import resolve_column
 from hana_bq_beam_connector_spark.config import PipelineConfig
 from hana_bq_beam_connector_spark.plans.chunking import (
-    Interval,
+    Intervals,
     equi_depth_intervals,
+    select_window,
 )
 from hana_bq_beam_connector_spark.sinks import parquet_append
 from hana_bq_beam_connector_spark.sources.jdbc import jdbc_scan
+from hana_bq_beam_connector_spark.tsdomain import ts_numeric
 from hana_bq_beam_connector_spark.typemap import stringify
-
-
-def select_window(df: DataFrame, config: PipelineConfig) -> DataFrame:
-    """Half-open ``[start_time, end_time)`` restriction on the
-    timestamp column — the reference's per-chunk WHERE clause
-    (HanaToBQ.java:58) with end_time honored (quirk #2 fixed).
-
-    Bounds are interpreted in the column's canonical numeric domain
-    (tsdomain: native integers for integral columns — no double cast,
-    so boundary rows can never be misclassified by float rounding;
-    epoch µs for timestamp/date columns).  The comparison is against
-    the RAW column with a typed literal, so Catalyst pushes it into
-    the scan (``PushedFilters``) — asserted in tests/test_pipeline.py.
-    """
-    from hana_bq_beam_connector_spark.colutil import resolve_column
-    from hana_bq_beam_connector_spark.tsdomain import ts_bound_lit
-
-    name, dtype = resolve_column(df, config.timestamp_column)
-    col = F.col(name)
-    cond = col >= ts_bound_lit(dtype, config.start_time)
-    if config.end_time != float("inf"):
-        cond = cond & (col < ts_bound_lit(dtype, config.end_time))
-    return df.where(cond)
 
 
 def run_copy_pipeline(
     spark: SparkSession,
     config: PipelineConfig,
     source_df: DataFrame | None = None,
-) -> tuple[DataFrame, list[Interval]]:
-    """Plan + build the incremental copy; returns (result_df, intervals).
+) -> tuple[DataFrame, Intervals]:
+    """Plan + build the copy; returns native-typed (result_df, intervals).
 
     ``source_df`` supplies a non-JDBC source (the parquet test
     stand-in); with a JDBC config the intervals become one source
@@ -64,6 +46,9 @@ def run_copy_pipeline(
     """
     if source_df is None:
         df = jdbc_scan(spark, config)  # schema probe; re-read chunked below
+        ts_column = resolve_column(df, config.timestamp_column)
+        # before planning: the planner's window filter is pushed down too
+        _assert_jdbc_tz_consistent(spark, ts_column[1])
     else:
         df = source_df
     intervals = equi_depth_intervals(
@@ -74,16 +59,11 @@ def run_copy_pipeline(
         config.end_time,
     )
     if source_df is None:
-        from hana_bq_beam_connector_spark.colutil import resolve_column
-
-        _, ts_dtype = resolve_column(df, config.timestamp_column)
-        _assert_jdbc_tz_consistent(spark, ts_dtype)
-        df = jdbc_scan(spark, config, intervals, ts_dtype=ts_dtype)
-        result = df
+        result = jdbc_scan(spark, config, intervals, ts_column=ts_column)
     else:
-        result = select_window(df, config)
-    if config.stringify:
-        result = stringify(result)
+        result = select_window(
+            df, config.timestamp_column, config.start_time, config.end_time
+        )
     return result, intervals
 
 
@@ -120,23 +100,37 @@ def _assert_jdbc_tz_consistent(spark: SparkSession, ts_dtype: str) -> None:
     )
 
 
+def append_observed(
+    result: DataFrame, config: PipelineConfig
+) -> tuple[int, int | float | None]:
+    """Append ``result`` (stringified if configured); returns the rows
+    written and their max timestamp in the canonical numeric domain.
+
+    Both ride the write itself via an ``Observation`` on the native
+    frame — one source pass, and the numbers are exactly what the sink
+    received (a separate aggregate would re-scan the source and could
+    disagree with the write under concurrent source inserts)."""
+    if config.dest_path is None:
+        raise ValueError("dest_path (or a BigQuery dataset) is required")
+    name, dtype = resolve_column(result, config.timestamp_column)
+    obs = Observation()
+    observed = result.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.max(ts_numeric(name, dtype)).alias("mx"),
+    )
+    if config.stringify:
+        observed = stringify(observed)
+    parquet_append(observed, config.dest_path)
+    m = obs.get
+    return int(m["n"]), m["mx"]
+
+
 def run_and_append(
     spark: SparkSession,
     config: PipelineConfig,
     source_df: DataFrame | None = None,
 ) -> int:
-    """Execute the copy into the configured sink; returns rows written.
-
-    The row count rides the write itself via an ``Observation`` — one
-    source pass, and the number reported is exactly what the sink
-    received (a separate pre-count would re-scan the source and could
-    disagree with the write under concurrent source inserts)."""
-    from pyspark.sql import Observation
-
+    """Execute the copy into the configured sink; returns rows written."""
     result, _ = run_copy_pipeline(spark, config, source_df)
-    if config.dest_path is None:
-        raise ValueError("dest_path (or a BigQuery dataset) is required")
-    obs = Observation()
-    observed = result.observe(obs, F.count(F.lit(1)).alias("n"))
-    parquet_append(observed, config.dest_path)
-    return int(obs.get["n"])
+    return append_observed(result, config)[0]

@@ -32,6 +32,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hana_bq_beam_connector_spark.colutil import resolve_column
+from hana_bq_beam_connector_spark.tsdomain import (
+    INTEGRAL_TYPES,
+    _US_PER_DAY,
+    _epoch_us_datetime,
+    is_time_typed,
+    ts_bound_lit,
+    ts_numeric,
+)
+
 
 @dataclass(frozen=True)
 class Interval:
@@ -61,17 +71,12 @@ class Interval:
         column.
         """
         if dtype == "date":
-            from hana_bq_beam_connector_spark.tsdomain import (
-                _epoch_us_datetime,
-            )
-
-            day_us = 86_400_000_000
 
             def d_lit(v: float) -> str:
                 # day-ceiling: date d (day-aligned) satisfies
                 # d_us >= lo  <=>  d >= ceil_day(lo), and
                 # d_us <  hi  <=>  d <  ceil_day(hi)
-                us = int(math.ceil(v / day_us) * day_us)
+                us = int(math.ceil(v / _US_PER_DAY) * _US_PER_DAY)
                 return (
                     f"{{d '{_epoch_us_datetime(us).strftime('%Y-%m-%d')}'}}"
                 )
@@ -81,10 +86,6 @@ class Interval:
                 pred += f" AND {column} < {d_lit(self.hi)}"
             return pred
         if dtype is not None and dtype.startswith("timestamp"):
-            from hana_bq_beam_connector_spark.tsdomain import (
-                _epoch_us_datetime,
-            )
-
             def ts_lit(v: float) -> str:
                 iso = _epoch_us_datetime(int(v)).strftime(
                     "%Y-%m-%d %H:%M:%S.%f"
@@ -105,15 +106,38 @@ class Interval:
         return pred
 
 
+class Intervals(list):
+    """Planned intervals; ``rows`` is the window's row count."""
+
+    def __init__(self, intervals: list[Interval], rows: int):
+        super().__init__(intervals)
+        self.rows = rows
+
+
+def select_window(
+    df: DataFrame, column: str, start: float, end: float = float("inf")
+) -> DataFrame:
+    """Half-open ``[start, end)`` restriction on the timestamp column —
+    the reference's per-chunk WHERE clause (HanaToBQ.java:58) with the
+    end bound honored (quirk #2 fixed); the copy path's one window
+    filter.  Bounds are in the column's canonical numeric domain
+    (tsdomain), compared to the RAW column as typed literals, so
+    Catalyst pushes both into the parquet or JDBC scan.
+    """
+    name, dtype = resolve_column(df, column)
+    col = F.col(name)
+    cond = col >= ts_bound_lit(dtype, start)
+    if not math.isinf(end):
+        cond = cond & (col < ts_bound_lit(dtype, end))
+    return df.where(cond)
+
+
 def _numeric_ts(df: DataFrame, column: str) -> DataFrame:
     """Project the chunking column to a double in its canonical
     numeric domain (tsdomain: epoch µs for timestamp/date columns,
     native value otherwise) so quantile math is uniform across column
     types.  µs values are < 2^53 until ~2255, so the double is exact
     and chunk boundaries never drift off a real row value."""
-    from hana_bq_beam_connector_spark.colutil import resolve_column
-    from hana_bq_beam_connector_spark.tsdomain import ts_numeric
-
     column, dtype = resolve_column(df, column)
     return df.select(
         ts_numeric(column, dtype).cast("double").alias("__ts")
@@ -127,48 +151,40 @@ def equi_depth_intervals(
     start: float,
     end: float = float("inf"),
     relative_error: float = 0.001,
-) -> list[Interval]:
+) -> Intervals:
     """Plan ~chunk_rows-deep half-open intervals over ``[start, end)``.
 
     Scale path: one approxQuantile pass (Greenwald-Khanna, driver holds
     only the sketch) versus the reference's full ROW_NUMBER sort inside
-    the source database (HanaToBQ.java:57).  The interval list is tiny
-    (≈ rows/chunk_rows entries) and feeds either
+    the source database (HanaToBQ.java:57), over the
+    :func:`select_window` rows only.  The interval list is tiny (≈
+    rows/chunk_rows entries) and feeds either
     ``spark.read.jdbc(predicates=...)`` or a parquet-scan filter union.
     """
     if chunk_rows <= 0:
         raise ValueError(f"chunk_rows must be positive, got {chunk_rows}")
-    from hana_bq_beam_connector_spark.colutil import resolve_column
-    from hana_bq_beam_connector_spark.tsdomain import INTEGRAL_TYPES
-
-    _, dtype = resolve_column(df, column)
+    column, dtype = resolve_column(df, column)
     # Integer-valued domains (native integrals, epoch-µs time columns)
     # get integer split points: approxQuantile's doubles lose exactness
     # above 2^53, but FLOORED splits keep every boundary an exact
     # integer literal — consecutive intervals still share boundaries,
     # so the partition-union property holds regardless of where the
     # (approximate anyway) split lands.
-    int_domain = (
-        dtype in INTEGRAL_TYPES
-        or dtype.startswith("timestamp")
-        or dtype == "date"
-    )
-    windowed = _numeric_ts(df, column).where(
-        (F.col("__ts") >= start) & (F.col("__ts") < end)
-    )
+    int_domain = dtype in INTEGRAL_TYPES or is_time_typed(dtype)
+    windowed = _numeric_ts(select_window(df, column, start, end), column)
     # Two planning actions (count + quantile sketch) read this frame;
-    # without persist each is a full source scan — over JDBC that is
-    # the whole table through one connection, twice.
+    # without persist each is a source scan of the window — over JDBC
+    # through one connection, twice.
     windowed.persist()
     try:
         n = windowed.count()
-        if n == 0:
-            return [Interval(start, end)]
         n_chunks = max(1, math.ceil(n / chunk_rows))
-        if n_chunks == 1:
-            return [Interval(start, end)]
         probs = [i / n_chunks for i in range(1, n_chunks)]
-        splits = windowed.approxQuantile("__ts", probs, relative_error)
+        splits = (
+            windowed.approxQuantile("__ts", probs, relative_error)
+            if probs
+            else []
+        )
     finally:
         windowed.unpersist()
     bounds: list[float] = [start]
@@ -180,7 +196,9 @@ def equi_depth_intervals(
         if s > bounds[-1]:
             bounds.append(s)
     bounds.append(end)
-    return [Interval(lo, hi) for lo, hi in zip(bounds, bounds[1:])]
+    return Intervals(
+        [Interval(lo, hi) for lo, hi in zip(bounds, bounds[1:])], n
+    )
 
 
 def equi_depth_intervals_exact(

@@ -8,21 +8,24 @@ JSON state file next to the sink; each run copies
 (write-new + rename).  Re-running after a crash before the rename
 re-copies the same window — paired with an append-only sink keyed for
 downstream dedup, that's at-least-once; the half-open window
-guarantees no gaps.
+guarantees no gaps.  A run is the plain copy (pipeline) from the
+watermark and starts no Spark action of its own.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from hana_bq_beam_connector_spark.config import PipelineConfig
-from hana_bq_beam_connector_spark.pipeline import run_copy_pipeline
-from hana_bq_beam_connector_spark.sinks import parquet_append
+from hana_bq_beam_connector_spark.pipeline import (
+    append_observed,
+    run_copy_pipeline,
+)
 
 
 def read_watermark(state_path: str, default: float) -> float:
@@ -49,42 +52,16 @@ def incremental_copy(
     source_df: DataFrame | None = None,
 ) -> int:
     """One incremental run: copy [watermark, end_time), advance the
-    watermark to max(ts)+1 of the copied rows.  Returns rows copied."""
-    watermark = read_watermark(state_path, config.start_time)
-    run_config = PipelineConfig(
-        table_name=config.table_name,
-        timestamp_column=config.timestamp_column,
-        start_time=watermark,
-        end_time=config.end_time,
-        chunk_size=config.chunk_size,
-        connection_string=config.connection_string,
-        username=config.username,
-        password=config.password,
-        driver=config.driver,
-        dest_dataset=config.dest_dataset,
-        dest_path=config.dest_path,
-        stringify=config.stringify,
-        jdbc_options=config.jdbc_options,
+    watermark to max(ts)+1 of the rows the sink received (canonical
+    integer domain: a double would round and re-copy the max row
+    forever).  Returns rows copied; an empty window writes nothing."""
+    window = dataclasses.replace(
+        config, start_time=read_watermark(state_path, config.start_time)
     )
-    result, _ = run_copy_pipeline(spark, run_config, source_df)
-    # Watermark math stays in the column's canonical integer domain
-    # (tsdomain: native for integral columns, epoch µs for timestamp
-    # columns): a double cast rounds past the 53-bit mantissa and a
-    # rounded-down watermark re-copies the max row forever.
-    from hana_bq_beam_connector_spark.colutil import resolve_column
-    from hana_bq_beam_connector_spark.tsdomain import ts_numeric
-
-    name, dtype = resolve_column(result, config.timestamp_column)
-    mx_col = F.max(ts_numeric(name, dtype))
-    agg = result.agg(
-        F.count(F.lit(1)).alias("n"), mx_col.alias("mx")
-    ).first()
-    n, mx = agg["n"], agg["mx"]
-    if n == 0:
+    result, intervals = run_copy_pipeline(spark, window, source_df)
+    if intervals.rows == 0:
         return 0
-    if config.dest_path is None:
-        raise ValueError("dest_path is required")
-    parquet_append(result, config.dest_path)
-    # next window starts just past the max ingested event time
-    write_watermark(state_path, mx + 1)
+    n, mx = append_observed(result, window)
+    if n:
+        write_watermark(state_path, mx + 1)
     return n

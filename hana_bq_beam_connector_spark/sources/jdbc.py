@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hana_bq_beam_connector_spark.colutil import resolve_column
 from hana_bq_beam_connector_spark.config import PipelineConfig
 from hana_bq_beam_connector_spark.plans.chunking import (
     Interval,
@@ -34,7 +35,7 @@ def jdbc_scan(
     lower_bound: float | None = None,
     upper_bound: float | None = None,
     num_partitions: int | None = None,
-    ts_dtype: str | None = None,
+    ts_column: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Read ``config.table_name`` over JDBC.
 
@@ -46,29 +47,29 @@ def jdbc_scan(
     * uniform stride (``partition_column``/bounds/``num_partitions``):
       Spark's stock mode, fine for near-uniform keys.
 
-    ``ts_dtype`` is the timestamp column's Spark dtype, used to render
-    interval predicates as typed literals (timestamp columns get JDBC
-    escape literals ``{ts '...'}`` — the one form every driver
-    translates; Derby rejects ANSI ``TIMESTAMP '...'`` — and date
-    columns get ``{d '...'}``; see plans/chunking.Interval).  When
-    omitted it is resolved with a driver-side metadata read
-    (``ResultSetMetaData``, no row transfer).
+    ``ts_column`` is the timestamp column's resolved ``(name, dtype)``.
+    The name is quoted by Spark's JDBC dialect, so a case-folded ``TS``
+    and a quoted ``ts`` both resolve.  The dtype renders interval
+    predicates as typed literals (timestamp columns get JDBC escape
+    literals ``{ts '...'}`` — the one form every driver translates;
+    Derby rejects ANSI ``TIMESTAMP '...'`` — and date columns get
+    ``{d '...'}``; see plans/chunking.Interval).  When omitted it is
+    resolved with a driver-side metadata read (``ResultSetMetaData``,
+    no row transfer).
     """
     if config.connection_string is None:
         raise ValueError("connection_string is required for jdbc_scan")
     reader = spark.read
     if intervals is not None:
-        if ts_dtype is None:
-            from hana_bq_beam_connector_spark.colutil import resolve_column
-
-            probe = spark.read.jdbc(
-                url=config.connection_string,
-                table=config.table_name,
-                properties=config.jdbc_properties,
-            )
-            _, ts_dtype = resolve_column(probe, config.timestamp_column)
+        if ts_column is None:
+            probe = jdbc_scan(spark, config)
+            ts_column = resolve_column(probe, config.timestamp_column)
+        name, dtype = ts_column
+        dialect = spark._jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(
+            config.connection_string
+        )
         predicates = intervals_to_jdbc_predicates(
-            intervals, config.timestamp_column, ts_dtype
+            intervals, dialect.quoteIdentifier(name), dtype
         )
         return reader.jdbc(
             url=config.connection_string,

@@ -3,9 +3,9 @@
 The reference binds its window bounds as *strings* against a numeric
 HANA column and lets the database coerce (HanaToDBRow.java:107-109,
 quirk #3).  Our engine instead defines one explicit numeric domain per
-column type, used consistently by the chunk planner
-(plans/chunking.py), the window filter (pipeline.select_window) and
-the incremental watermark (plans/incremental.py):
+column type, used consistently by the window filter and chunk planner
+(plans.chunking.select_window / equi_depth_intervals) and the
+incremental watermark (plans/incremental.py):
 
 * integral columns (``bigint``/``int``/...): the column's **native**
   integer domain — whatever unit the data ships in (the legacy
@@ -37,6 +37,7 @@ silently misclassify a boundary row of a half-open window.
 
 from __future__ import annotations
 
+import math
 from datetime import datetime, timedelta
 
 from pyspark.sql import Column
@@ -103,10 +104,11 @@ def ts_bound_lit(dtype: str, bound: float | int) -> Column:
     widens the date side for the compare, which keeps half-open µs
     semantics exact (a date column is µs-aligned by construction) at
     the cost of pushdown — acceptable, date-chunked copies are not the
-    hot path.
+    hot path.  Integral columns take the ceiling of a fractional
+    bound: exact for both ``col >= lo`` and ``col < hi``.
     """
     if dtype in INTEGRAL_TYPES:
-        return F.lit(int(bound))
+        return F.lit(math.ceil(bound))
     if not is_time_typed(dtype):
         return F.lit(bound)
     us = _bound_us(bound)

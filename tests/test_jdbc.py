@@ -256,3 +256,169 @@ def test_jdbc_uniform_stride_date_string_bounds(spark, derby_url):
     assert df.rdd.getNumPartitions() == 4
     assert df.count() == 100
     assert sorted(r["EVENT_ID"] for r in df.collect()) == list(range(100))
+
+
+BASE_MS = 1_704_067_200_000  # 2024-01-01 00:00:00 UTC
+
+
+@pytest.fixture(scope="module")
+def ts_table(spark, derby_url):
+    """A Derby TIMESTAMP table of 60 rows, 90 s (plus a few ms) apart;
+    returns its name and each EVENT_ID's timestamp in epoch µs."""
+    jvm = spark._jvm
+    conn = jvm.java.sql.DriverManager.getConnection(derby_url)
+    st = conn.createStatement()
+    st.executeUpdate(
+        "CREATE TABLE events_inc (ts TIMESTAMP NOT NULL, event_id BIGINT)"
+    )
+    ps = conn.prepareStatement("INSERT INTO events_inc VALUES (?, ?)")
+    us = {}
+    for i in range(60):
+        ms = BASE_MS + i * 90_000 + i % 7
+        ps.setTimestamp(1, jvm.java.sql.Timestamp(ms))
+        ps.setLong(2, i)
+        ps.addBatch()
+        us[i] = ms * 1000
+    ps.executeBatch()
+    st.close()
+    conn.close()
+    return "events_inc", us
+
+
+def _ts_config(url: str, table: str, dest: str, **kw) -> PipelineConfig:
+    return PipelineConfig(
+        table_name=table,
+        timestamp_column="ts",
+        start_time=BASE_MS * 1000,
+        chunk_size=8,
+        connection_string=url,
+        driver=DERBY_DRIVER,
+        dest_path=dest,
+        **kw,
+    )
+
+
+def _parquet_files(path: str) -> list[str]:
+    import os
+
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+
+@pytest.mark.parametrize("stringify", [False, True])
+def test_incremental_copy_on_jdbc_timestamp_column(
+    spark, derby_url, ts_table, tmp_path, stringify
+):
+    """Two incremental windows over a real TIMESTAMP source: each
+    copies its rows, the watermark is the max copied µs + 1, and a run
+    with no new data writes no file and keeps the watermark — also
+    with ``stringify``, whose sink holds strings but whose watermark
+    is taken on the native column."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    from hana_bq_beam_connector_spark.plans.incremental import (
+        incremental_copy,
+        read_watermark,
+    )
+
+    table, us = ts_table
+    dest, state = str(tmp_path / "sink"), str(tmp_path / "state.json")
+    cfg = _ts_config(
+        derby_url, table, dest, end_time=us[30], stringify=stringify
+    )
+    assert incremental_copy(spark, cfg, state) == 30
+    assert read_watermark(state, 0) == us[29] + 1
+    cfg = dataclasses.replace(cfg, end_time=float("inf"))
+    assert incremental_copy(spark, cfg, state) == 30
+    assert read_watermark(state, 0) == us[59] + 1
+
+    files = _parquet_files(dest)
+    assert incremental_copy(spark, cfg, state) == 0
+    assert _parquet_files(dest) == files
+    assert read_watermark(state, 0) == us[59] + 1
+
+    sunk = spark.read.parquet(dest)
+    want_type = "string" if stringify else "timestamp"
+    assert dict(sunk.dtypes)["TS"] == want_type
+    got = {
+        int(r[0]): r[1]
+        for r in sunk.select(
+            F.col("EVENT_ID").cast("long"),
+            F.unix_micros(F.col("TS").cast("timestamp")),
+        ).collect()
+    }
+    assert got == us
+
+
+def test_tz_guard_fires_before_any_job(spark, derby_url, ts_table, tmp_path):
+    """A session timezone that differs from the JVM's would shift every
+    pushed-down window literal; the copy must refuse before planning,
+    so no Spark job starts."""
+    from hana_bq_beam_connector_spark.pipeline import run_and_append
+
+    sc = spark.sparkContext
+    jvm_tz = sc._jvm.java.util.TimeZone.getDefault().getID()
+    tz = "Asia/Tokyo" if jvm_tz != "Asia/Tokyo" else "America/New_York"
+    old = spark.conf.get("spark.sql.session.timeZone")
+    group = "test-tz-guard"
+    cfg = _ts_config(derby_url, ts_table[0], str(tmp_path / "sink"))
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    sc.setJobGroup(group, "tz guard")
+    try:
+        with pytest.raises(RuntimeError, match="timezone"):
+            run_and_append(spark, cfg)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_select_window_filter_is_pushed_down_to_jdbc(
+    spark, derby_url, ts_table
+):
+    """JDBC twin of the parquet pushdown test: both window bounds reach
+    the Derby query as PushedFilters, so the planner reads only the
+    window."""
+    from hana_bq_beam_connector_spark.plans.chunking import select_window
+
+    table, us = ts_table
+    df = spark.read.jdbc(
+        url=derby_url, table=table, properties={"driver": DERBY_DRIVER}
+    )
+    window = select_window(df, "ts", us[10], us[20])
+    plan = window._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [" in plan, plan
+    # the metadata string is cut at 100 chars: no closing bracket
+    pushed = plan.split("PushedFilters: [", 1)[1]
+    assert "GreaterThanOrEqual(TS" in pushed and "LessThan(TS" in pushed
+    assert window.count() == 10
+
+
+def test_run_and_append_on_spark_written_table(spark, derby_url, tmp_path):
+    """Spark's JDBC writer quotes column names, so this table's ``ts``
+    stays lower-case; the chunk predicates must quote the resolved
+    name or Derby folds it to a missing ``TS``."""
+    from hana_bq_beam_connector_spark.pipeline import run_and_append
+    from hana_bq_beam_connector_spark.sinks import jdbc_append
+
+    jdbc_append(
+        spark.range(200).selectExpr("id AS ts", "id * 3 AS event_id"),
+        derby_url,
+        "events_spark_written",
+        driver=DERBY_DRIVER,
+    )
+    cfg = PipelineConfig(
+        table_name="events_spark_written",
+        timestamp_column="ts",
+        start_time=0,
+        chunk_size=50,
+        connection_string=derby_url,
+        driver=DERBY_DRIVER,
+        dest_path=str(tmp_path / "sink"),
+    )
+    assert run_and_append(spark, cfg) == 200
+    sunk = spark.read.parquet(cfg.dest_path)
+    got = sorted(r["event_id"] for r in sunk.collect())
+    assert got == [3 * i for i in range(200)]

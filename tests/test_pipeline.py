@@ -9,8 +9,8 @@ from hana_bq_beam_connector_spark.config import PipelineConfig
 from hana_bq_beam_connector_spark.pipeline import (
     run_and_append,
     run_copy_pipeline,
-    select_window,
 )
+from hana_bq_beam_connector_spark.plans.chunking import select_window
 from hana_bq_beam_connector_spark.tsdomain import ts_numeric
 
 # Canonical-domain bounds (epoch µs): 2024-01-05 / 2024-01-15.
@@ -35,19 +35,23 @@ def _config(dest: str | None = None, **kw) -> PipelineConfig:
 
 
 def test_select_window_half_open(spark, events):
-    cfg = _config()
-    got = select_window(events, cfg).count()
-    want = events.where(
-        (_ts_us(events) >= T5_US) & (_ts_us(events) < T15_US)
-    ).count()
-    assert got == want > 0
+    for df, start, end in [
+        (events, T5_US, T15_US),
+        # Fractional bounds on an integral column (the CLI's
+        # --start-time is a float): ts=100 is outside [100.5, 200.5).
+        (spark.range(300).toDF("ts"), 100.5, 200.5),
+    ]:
+        got = select_window(df, "ts", start, end).count()
+        want = df.where((_ts_us(df) >= start) & (_ts_us(df) < end)).count()
+        assert got == want > 0, (start, end)
 
 
 def test_select_window_filter_is_pushed_down(spark, events):
     """The typed-literal compare must reach the parquet scan: both
     range bounds in PushedFilters, not just IsNotNull (tsdomain
     docstring contract)."""
-    plan = select_window(events, _config())._jdf.queryExecution().toString()
+    window = select_window(events, "ts", T5_US, T15_US)
+    plan = window._jdf.queryExecution().toString()
     import re
 
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)

@@ -102,19 +102,18 @@ def test_select_window_on_date_column(spark):
     stay exact (dates are µs-aligned by construction)."""
     from pyspark.sql import functions as F
 
-    from hana_bq_beam_connector_spark.config import PipelineConfig
-    from hana_bq_beam_connector_spark.pipeline import select_window
+    from hana_bq_beam_connector_spark.plans.chunking import select_window
 
     df = spark.sql(
         "SELECT sequence(DATE'2024-01-01', DATE'2024-01-20') AS d"
     ).select(F.explode("d").alias("ts"))
-    cfg = PipelineConfig(
-        table_name="t",
-        timestamp_column="ts",
-        start_time=1_704_412_800_000_000,  # 2024-01-05
-        end_time=1_705_276_800_000_000,  # 2024-01-15 (exclusive)
+    window = select_window(
+        df,
+        "ts",
+        1_704_412_800_000_000,  # 2024-01-05
+        1_705_276_800_000_000,  # 2024-01-15 (exclusive)
     )
-    rows = sorted(str(r["ts"]) for r in select_window(df, cfg).collect())
+    rows = sorted(str(r["ts"]) for r in window.collect())
     assert len(rows) == 10
     assert rows[0] == "2024-01-05" and rows[-1] == "2024-01-14"
 
