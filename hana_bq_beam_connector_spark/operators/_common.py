@@ -104,6 +104,20 @@ def explode_nonempty(col):
     return F.explode_outer(col)
 
 
+# All unordered pairs (p1 < p2) of a sorted, distinct ``items`` array,
+# as an array of structs: the in-partition pair expansion of basket
+# (rec) and supplier-set (graph) arrays.  Callers explode it with
+# explode_outer + IS NOT NULL, not a plain explode: the outer generator
+# is exempt from InferFiltersFromGenerate, so the pair array is built
+# once per row instead of twice (see explode_nonempty), and
+# single-item arrays (empty pair array) drop via the null filter.
+PAIR_ARR = (
+    "flatten(transform(items, (x, i) -> "
+    "transform(slice(items, i + 2, size(items)), "
+    "y -> named_struct('p1', x, 'p2', y))))"
+)
+
+
 def posexplode_nonempty(col):
     """``posexplode`` variant of :func:`explode_nonempty` — same
     Catalyst trap, same non-empty/non-null caller contract."""

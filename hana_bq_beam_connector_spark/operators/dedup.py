@@ -12,7 +12,10 @@ toolbox for training-data dedup at 100 TB:
   10^9+ documents.  All hashing is whole-stage-codegen'd SQL
   expressions (functions/hashing.py) — zero Python in the hot path;
 * SimHash: 32-bit sign-aggregated fingerprint, hamming distance via
-  bit_count(xor) for near-dup pairing.
+  bit_count(xor) for near-dup pairing;
+* near-dup clusters: connected components of the pair graph — an exact
+  union-find inside each Arrow batch (the one Python pass here), then
+  star-contraction rounds to a star-forest fixpoint.
 
 The reference implements none of this (SURVEY §2b); capability target
 comes from the driver's north star (BASELINE.json).
@@ -20,8 +23,12 @@ comes from the driver's north star (BASELINE.json).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from hana_bq_beam_connector_spark.functions.hashing import (
@@ -518,6 +525,93 @@ def hamming(col_a: str, col_b: str) -> Column:
     return F.expr(f"bit_count({col_a} ^ {col_b})").cast("long")
 
 
+def _batch_union_find(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    """Exact union-find over each Arrow batch of (a, b) edges on its
+    own, so a task holds at most ``maxRecordsPerBatch`` edges of state
+    whatever its partition size.  A union hangs the larger root under
+    the smaller, so every root is its tree's minimum.  Every node seen
+    in the batch emits (batch-component min, node): a star per batch
+    component, plus a self row per root that carries the node universe
+    (self-loop-only nodes included) through to the labels."""
+    for pdf in batches:
+        parent: dict[int, int] = {}
+
+        def find(x: int) -> int:
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for u, v in zip(pdf["a"].tolist(), pdf["b"].tolist()):
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[max(ru, rv)] = min(ru, rv)
+        yield pd.DataFrame({"a": [find(x) for x in parent], "b": list(parent)})
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """One aggregate query: True iff no node is both a centre (``a``) and
+    a leaf (``b``) and every leaf has exactly one distinct centre.
+    Duplicate edges are allowed.  On a < b edges a star's centre is
+    its minimum, so a star forest IS the labelling."""
+    roles = edges.select(
+        F.col("a").alias("node"), F.lit(None).alias("centre")
+    ).unionByName(
+        edges.select(F.col("b").alias("node"), F.col("a").alias("centre"))
+    )
+    bad = (
+        roles.groupBy("node")
+        .agg(
+            (F.count(F.lit(1)) > F.count("centre")).alias("is_centre"),
+            F.min("centre").alias("lo"),
+            F.max("centre").alias("hi"),
+        )
+        .where(
+            (F.col("is_centre") & F.col("lo").isNotNull())
+            | (F.col("lo") != F.col("hi"))
+        )
+    )
+    return bad.isEmpty()
+
+
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star then one small-star half-round (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond") over a < b edges.
+    Components are preserved, the edge set never grows, and the rounds
+    reach one star per component, centred on its minimum, in
+    O(log² n) rounds (their bound for alternating the two).  Each
+    half-round is one groupBy(min) + one equi-join + distinct: plain
+    partial-aggregable shuffles."""
+    sym = edges.unionByName(
+        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    )
+    # large-star: for each node u, m = min(N(u) ∪ {u}); attach every
+    # LARGER neighbor v directly to m.
+    mins = sym.groupBy("a").agg(F.min("b").alias("mn"))
+    ls = (
+        sym.join(mins, "a")
+        .where(F.col("b") > F.col("a"))
+        .select(F.least(F.col("mn"), F.col("a")).alias("a"), "b")
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    # small-star on the (a < b) output: node u = b's smaller neighbors
+    # are the a's; m = min of them; re-hang every smaller neighbor
+    # (and u itself) onto m.
+    mins2 = ls.groupBy("b").agg(F.min("a").alias("mn"))
+    return (
+        ls.join(mins2, "b")
+        .select(F.col("mn").alias("a"), F.col("a").alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .unionByName(mins2.select(F.col("mn").alias("a"), "b"))
+        .distinct()
+    )
+
+
 def near_dup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -525,169 +619,70 @@ def near_dup_clusters(
     max_iter: int = 50,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Connected components over a near-dup pair list: (node,
-    cluster_id) where cluster_id = MIN node id in the component.
-
-    ``max_iter`` note (measured, simulation in tests): pointer
-    jumping makes label-REFERENCE chains logarithmic, but rounds are
-    still bounded by min-DISCOVERY propagation, which on sparse
-    subcritical random graphs (many mid-size tree-ish components)
-    empirically needs ~22-26 rounds regardless of whether extra jump
-    hops are added — a 200-node random graph needs 22, a 10^5-node
-    one 15.  50 covers every measured shape with 2× headroom; truly
-    adversarial graphs should use :func:`cc_star` (provably O(log n)
-    rounds), equivalence-tested against this operator.
+    """Connected components over a near-dup pair list: (node, label)
+    where label = MIN node id in the component.
 
     Pair generation (MinHash/SimHash/embedding LSH) yields *edges*; a
     dedup pipeline needs the transitive closure — A~B and B~C must
     collapse to ONE surviving document even when A~C was never a
-    candidate pair.  Iterative min-label propagation: each round every
-    node takes the min label among itself and its neighbors (one
-    shuffle join + one shuffle agg per round; self rows carry the
-    previous label through the agg, so convergence detection is a
-    free extra agg column instead of a second join; the symmetric
-    edge list is one explode scan of the pair lineage, not a
-    two-branch union that computes it twice), plus POINTER JUMPING —
-    each node also takes its label's own label (one self-join of the
-    tiny (node, label) frame) — so rounds are O(log diameter), not
-    O(diameter): a 10^6-node chain converges in ~20 rounds instead
-    of 10^6.  The loop runs to a detected fixpoint and RAISES if
-    max_iter is exhausted — silently returning half-merged clusters
-    would under-delete duplicates.
+    candidate pair.  Local, then global (the partition-local-then-merge
+    shape of REPOSE, PAPERS.md):
 
-    Rounds persist (fast: AQE-coalesced millisecond jobs) with a
-    ``localCheckpoint`` every 5th round: ``persist`` alone truncates
-    recomputation but NOT the logical plan, which doubles per round
-    (the labels frame feeds the neighbor join, the jump join, and the
-    self branch) — by round ~25 the driver OOMs just stringifying the
-    plan.  The rationed checkpoint resets the plan to a leaf, so plan
-    size is bounded at 2^5 leaf copies while shallow graphs never pay
-    checkpoint materialization (measured 5× cheaper per round than
-    checkpointing every round).  Pass ``checkpoint_dir`` at cluster
-    scale to use a reliable ``checkpoint`` — executor-local
-    ``localCheckpoint`` blocks die with a lost executor, which would
-    kill a 10-round job.  The label frame is (id, id) pairs only — at
-    10^9 nodes ≈ 16 GB cluster-wide, far below the raw corpus.  Only
-    nodes with ≥1 edge appear (singletons are trivially their own
-    cluster; leaving them out keeps the state proportional to the
-    duplicate population, a small fraction of the corpus).
+    1. one ``mapInPandas`` pass runs an exact union-find inside each
+       Arrow batch (:func:`_batch_union_find`) and emits (batch-
+       component min, node).  That is already a star forest per batch;
+       on real LSH graphs (dense, shallow, small) it is usually the
+       whole answer.  Python because union-find has no JVM expression
+       form; per-task state is bounded by
+       ``spark.sql.execution.arrow.maxRecordsPerBatch`` edges.
+    2. while the union of the batch stars is not a star forest
+       (:func:`_is_star_forest`, one aggregate query), one
+       large-star/small-star round (:func:`_star_round`) contracts it.
+       Components that span batches merge in O(log² n) rounds with a
+       non-increasing edge set, so shuffled-id paths and grids, where
+       min-label propagation needs O(diameter) rounds, converge too.
+    3. every leaf takes its centre; every other node (centres,
+       self-loop-only nodes) labels itself.
+
+    Each pass and round is materialized through ``plan_reset``, so the
+    lineage stays one round deep: ``localCheckpoint`` by default, a
+    reliable ``checkpoint`` under ``checkpoint_dir`` at cluster scale
+    (executor-local blocks die with a lost executor, which would kill
+    a multi-round job).  RAISES after ``max_iter`` rounds without a
+    star forest — silently returning half-merged clusters would
+    under-delete duplicates.  Only nodes with ≥1 edge appear
+    (singletons are trivially their own cluster; leaving them out
+    keeps the state proportional to the duplicate population).
     """
-    edges = _persist(
+    dtype = pairs.schema[id_a].dataType
+    forest = _plan_reset(
         pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(id_b).alias("src"), F.col(id_a).alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
+            F.col(id_a).alias("a"), F.col(id_b).cast(dtype).alias("b")
+        ).mapInPandas(
+            _batch_union_find,
+            StructType([StructField("a", dtype), StructField("b", dtype)]),
+        ),
+        checkpoint_dir,
     )
-    pinned = _persist(
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
+    edges = forest.where(F.col("a") != F.col("b"))
+    rounds = 0
+    while not _is_star_forest(edges):
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"near_dup_clusters did not reach a star forest in "
+                f"{max_iter} rounds"
+            )
+        edges = _plan_reset(_star_round(edges), checkpoint_dir)
+        rounds += 1
+    # min over {self} ∪ {centre}: a leaf's centre is smaller than it
+    return (
+        forest.select(F.col("b").alias("node"), F.col("b").alias("label"))
+        .unionByName(
+            edges.select(F.col("b").alias("node"), F.col("a").alias("label"))
+        )
+        .groupBy("node")
+        .agg(F.min("label").alias("label"))
     )
-    labels = pinned
-    converged = False
-    prev_persisted = None
-    for it in range(max_iter):
-        # min over {self} ∪ {neighbor labels} ∪ {label's label}; self
-        # rows are tagged so the same agg also yields the previous
-        # label — convergence detection costs one more agg column,
-        # not a second join+job
-        nbr = edges.join(
-            labels, edges["src"] == labels["node"]
-        ).select(
-            F.col("dst").alias("node"),
-            "label",
-            F.lit(None).cast("long").alias("old"),
-        )
-        merged = nbr
-        if it >= 2:
-            # pointer jump: every label value is itself a node id
-            # present in the frame (labels start as node ids and only
-            # ever copy other labels), so the inner self-join is
-            # total.  Deferred to round 3+: real near-dup graphs are
-            # dense/shallow and reach the fixpoint in ≤2 rounds, and
-            # the label frame is so small that the extra join is pure
-            # fixed-overhead there (measured ~2× round cost); deep
-            # chains still get O(log diameter) from round 3 on.
-            lab2 = labels.select(
-                F.col("node").alias("j_node"),
-                F.col("label").alias("j_label"),
-            )
-            jump = labels.join(
-                lab2, labels["label"] == lab2["j_node"]
-            ).select(
-                "node",
-                F.col("j_label").alias("label"),
-                F.lit(None).cast("long").alias("old"),
-            )
-            merged = merged.unionByName(jump)
-        round_df = (
-            merged.unionByName(
-                labels.select("node", "label", F.col("label").alias("old"))
-            )
-            .groupBy("node")
-            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-        )
-        # persist is the fast path (AQE-coalesced ~ms jobs); a
-        # localCheckpoint every 5th round truncates the logical plan,
-        # which otherwise doubles per round (label frame feeds 3
-        # branches) — bounded at 2^5 leaf copies between resets
-        # instead of OOMing the driver on deep graphs.  Checkpointing
-        # EVERY round costs ~5× on shallow graphs (uncoalesced
-        # partition materialization), so it's rationed.
-        if (it + 1) % 5 == 0:
-            new_labels = _plan_reset(round_df, checkpoint_dir)
-            if prev_persisted is not None:
-                prev_persisted.unpersist()
-                prev_persisted = None
-        else:
-            # persist WITHOUT an eager count: the convergence count
-            # below touches every partition and doubles as the
-            # materializing action — one job per round, not two.
-            # (persist_reused's eager materialization exists for
-            # CONCURRENT branch fan-out; rounds here are sequential,
-            # so the first action fills the cache race-free.)
-            from pyspark import StorageLevel
-
-            new_labels = round_df.persist(StorageLevel.MEMORY_AND_DISK)
-            if prev_persisted is not None:
-                prev_persisted.unpersist()
-            prev_persisted = new_labels
-        changed = new_labels.where(
-            F.col("label") != F.col("old")
-        ).count()
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        edges.unpersist()
-        pinned.unpersist()
-        raise RuntimeError(
-            f"near_dup_clusters did not converge in {max_iter} rounds — "
-            "component diameter exceeds 2^max_iter or the edge list is "
-            "being regenerated nondeterministically between rounds"
-        )
-    # Hand the caller a checkpointed leaf, not the iterative lineage:
-    # the accumulated plan is exponentially large as a tree (fine to
-    # EXECUTE through the per-round caches, pathological to reprint /
-    # reoptimize downstream, and silently recomputed from scratch if
-    # the caches are evicted).  Cheap: reads the final cached round.
-    out = _plan_reset(labels, checkpoint_dir)
-    edges.unpersist()
-    pinned.unpersist()
-    if prev_persisted is not None:
-        prev_persisted.unpersist()
-    return out
 
 
 def embedding_near_dup_pairs(
@@ -838,133 +833,3 @@ def embedding_near_dup_pairs(
         .where(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
-
-
-def cc_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the documented swap-in for :func:`near_dup_clusters`
-    on ADVERSARIAL graphs; returns the identical (node, label=min
-    component id) frame (equivalence-tested on chains, cliques,
-    bridges and the real LSH pair graph).
-
-    Why a second algorithm: label propagation's per-round cost rides
-    the FULL edge list forever, and its pointer-jump join assumes the
-    label frame stays small.  Star contraction instead REWRITES the
-    edge set each round — large-star hangs every node's larger
-    neighbors onto its minimum, small-star re-hangs smaller neighbors
-    — provably converging in O(log n) rounds with the edge count
-    non-increasing, so hostile long-chain / high-degree graphs can't
-    inflate intermediate state.  Each half-round is one groupBy(min)
-    + one equi-join + distinct: plain partial-aggregable shuffles,
-    nothing quadratic.
-
-    Convergence: a one-row (count, xor-of-pair-hashes) checksum per
-    round — equal checksums are confirmed with an exact anti-join
-    before declaring the fixpoint (the checksum only gates when the
-    expensive exact check runs).  Raises if ``max_iter`` is
-    exhausted, same contract as ``near_dup_clusters``.
-    """
-    # Node universe from the RAW pairs (before dropping self-loops):
-    # a node whose only edge is a self-loop is still "a node with an
-    # edge" and must label itself, matching near_dup_clusters.
-    all_nodes = _persist(
-        pairs.select(F.col(id_a).alias("node"))
-        .unionByName(pairs.select(F.col(id_b).alias("node")))
-        .distinct()
-    )
-    canon = _persist(
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("a"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-    def _checksum(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    edges = canon
-    prev_sum = _checksum(edges)
-    converged = False
-    for _ in range(max_iter):
-        sym = edges.unionByName(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        # large-star: for each node u, m = min(N(u) ∪ {u}); attach
-        # every LARGER neighbor v directly to m.
-        mins = sym.groupBy("a").agg(F.min("b").alias("mn"))
-        ls = (
-            sym.join(mins, "a")
-            .where(F.col("b") > F.col("a"))
-            .select(
-                F.least(F.col("mn"), F.col("a")).alias("a"),
-                F.col("b").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # small-star on the (a < b) canonical output: node u = b's
-        # smaller neighbors are the a's; m = min of them; re-hang
-        # every smaller neighbor (and u itself) onto m.
-        mins2 = ls.groupBy("b").agg(F.min("a").alias("mn"))
-        ss = (
-            ls.join(mins2, "b")
-            .select(F.col("mn").alias("a"), F.col("a").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .unionByName(
-                mins2.select(F.col("mn").alias("a"), F.col("b").alias("b"))
-            )
-            .distinct()
-        )
-        # Eager localCheckpoint, not persist: the round's plan feeds
-        # edges into sym twice, two joins and two distincts — lineage
-        # grows ~6× per round, and a persisted-but-unresolved plan
-        # OOMs the driver during analysis by round ~7.  The round is
-        # materialized for the checksum anyway, so checkpointing here
-        # is the same job with a truncated plan.  (Cluster-scale:
-        # reliable checkpoint dir, same as near_dup_clusters.)
-        new_edges = _plan_reset(ss, checkpoint_dir)
-        new_sum = _checksum(new_edges)
-        if new_sum == prev_sum:
-            # cheap checksum matched — confirm exactly before stopping
-            diff = (
-                new_edges.join(edges, ["a", "b"], "left_anti").limit(1).count()
-                + edges.join(new_edges, ["a", "b"], "left_anti")
-                .limit(1)
-                .count()
-            )
-            if diff == 0:
-                converged = True
-        edges, prev_sum = new_edges, new_sum
-        if converged:
-            break
-    if not converged:
-        raise RuntimeError(
-            f"cc_star did not converge within {max_iter} rounds"
-        )
-    # Fixpoint edges form stars (min, v): every non-min node holds its
-    # component min as its (unique) smaller endpoint; minima label
-    # themselves.
-    nonmin = edges.groupBy(F.col("b").alias("node")).agg(
-        F.min("a").alias("label")
-    )
-    out = all_nodes.join(nonmin, "node", "left").select(
-        "node", F.coalesce("label", "node").alias("label")
-    )
-    canon.unpersist()
-    all_nodes.unpersist()
-    return out

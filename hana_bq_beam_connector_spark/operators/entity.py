@@ -9,9 +9,10 @@ block key and an exact union-find inside each Arrow batch, instead of
 an O(log diameter)-round iterative join algorithm whose per-round job
 overhead dominates at any scale.
 
-The iterative operator (`operators/dedup.py near_dup_clusters`)
-remains the fallback for graphs whose edges DO cross grouping keys
-(MinHash bands, embedding buckets — a doc can land in many bands).
+The general operator (`operators/dedup.py near_dup_clusters`) serves
+graphs whose edges DO cross grouping keys (MinHash bands, embedding
+buckets — a doc can land in many bands): union-find inside each Arrow
+batch, then star-contraction rounds across batches.
 """
 
 from __future__ import annotations

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hana_bq_beam_connector_spark.operators._common import PAIR_ARR
 from hana_bq_beam_connector_spark.queries import register
 from hana_bq_beam_connector_spark.sources.files import load_table
 
@@ -86,22 +87,9 @@ def _supp(baskets: DataFrame) -> DataFrame:
     )
 
 
-# All unordered in-basket pairs (p1 < p2) from the sorted item array.
-# explode_outer + IS NOT NULL instead of a plain explode: the outer
-# generator is exempt from InferFiltersFromGenerate, so the pair
-# array is built once per basket instead of twice (see
-# operators/_common.explode_nonempty), and single-item baskets (empty
-# pair array) drop via the null filter.
-_PAIR_ARR = (
-    "flatten(transform(items, (x, i) -> "
-    "transform(slice(items, i + 2, size(items)), "
-    "y -> named_struct('p1', x, 'p2', y))))"
-)
-
-
 def _pairs(baskets: DataFrame) -> DataFrame:
     return (
-        baskets.select(F.explode_outer(F.expr(_PAIR_ARR)).alias("pr"))
+        baskets.select(F.explode_outer(F.expr(PAIR_ARR)).alias("pr"))
         .where(F.col("pr").isNotNull())
         .select("pr.p1", "pr.p2")
         .groupBy("p1", "p2")

@@ -27,7 +27,7 @@ _DEFAULT_CONFS: dict[str, str] = {
     # partitioning for consumers that rely on it — none here do — at
     # the cost of pinning every persisted frame's stage count to the
     # static shuffle.partitions even when the frame is a few hundred
-    # rows.  The iterative operators (label propagation, capacity
+    # rows.  The iterative operators (star contraction, capacity
     # refinement, PQ/rec pinned stages) re-read small cached frames
     # dozens of times per query; with the default each read schedules
     # 32 near-empty tasks per stage (measured: 230-task jobs by round

@@ -19,6 +19,7 @@ from hana_bq_beam_connector_spark.operators.similarity import (
     lsh_bucket_topk,
 )
 from hana_bq_beam_connector_spark.sources.files import load_table
+from tests.test_properties import _union_find_components
 
 SF = "/root/testdata/sf0.001"
 
@@ -587,8 +588,9 @@ def test_near_dup_clusters_transitive(spark):
 def test_near_dup_clusters_reliable_checkpoint(spark, tmp_path):
     """checkpoint_dir switches the lineage resets to a reliable
     ``checkpoint``: same answer as the localCheckpoint default, and
-    RDD checkpoint files actually land in the directory (a long chain
-    forces >5 rounds, so at least one in-loop reset fires)."""
+    RDD checkpoint files actually land in the directory (the
+    union-find pass is always materialized through the reset, so
+    files appear even when no contraction round runs)."""
     from hana_bq_beam_connector_spark.operators.dedup import near_dup_clusters
 
     chain = [(i, i + 1) for i in range(1, 40)]
@@ -755,75 +757,85 @@ def test_pq_topk_rebuild_is_memoized_and_identical(spark):
     assert sorted(map(tuple, rebuilt_df.collect())) == first
 
 
-@pytest.mark.parametrize(
-    "name,edges",
-    [
-        ("chain", [(i, i + 1) for i in range(100)]),
-        ("reverse_chain", [(i + 1, i) for i in range(50)]),
-        ("star", [(0, i) for i in range(1, 20)]),
-        (
-            "cliques_bridge",
+def _cc_shapes():
+    import random
+
+    rnd = random.Random(7)
+    shapes = {
+        "chain": [(i, i + 1) for i in range(100)],
+        "reverse_chain": [(i + 1, i) for i in range(50)],
+        "star": [(0, i) for i in range(1, 20)],
+        "cliques_bridge": (
             [(i, j) for i in range(5) for j in range(i + 1, 5)]
             + [(10 + i, 10 + j) for i in range(5) for j in range(i + 1, 5)]
-            + [(4, 10)],
+            + [(4, 10)]
         ),
-    ],
-)
-def test_cc_star_equals_label_propagation(spark, name, edges):
-    """Large-star/small-star contraction must produce the identical
-    (node, min-id label) frame as min-label propagation on every graph
-    shape — including the chain shapes that are label propagation's
-    worst case and star contraction's reason to exist."""
-    from hana_bq_beam_connector_spark.operators.dedup import (
-        cc_star,
-        near_dup_clusters,
-    )
+        # subcritical random graph: one 111-node component
+        "random_200": [
+            (rnd.randrange(200), rnd.randrange(200)) for _ in range(150)
+        ],
+    }
+    rnd = random.Random(11)
+    ids = list(range(3000))
+    rnd.shuffle(ids)
+    shapes["path_3000_shuffled"] = [(ids[i], ids[i + 1]) for i in range(2999)]
+    ids = list(range(1600))
+    rnd.shuffle(ids)
+    cell = [ids[i * 40 : (i + 1) * 40] for i in range(40)]
+    shapes["grid_40x40_shuffled"] = [
+        (cell[i][j], cell[i][j + 1]) for i in range(40) for j in range(39)
+    ] + [(cell[i][j], cell[i + 1][j]) for i in range(39) for j in range(40)]
+    shapes["random_2000_1500"] = [
+        (rnd.randrange(2000), rnd.randrange(2000)) for _ in range(1500)
+    ]
+    shapes["self_loops_only"] = [(5, 5), (9, 9), (9, 9)]
+    return shapes
 
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    a = sorted(map(tuple, cc_star(df).collect()))
-    b = sorted(map(tuple, near_dup_clusters(df).collect()))
-    assert a == b and len(a) > 0, name
+
+_CC_SHAPES = _cc_shapes()
 
 
-def test_cc_random_graph_converges_both(spark):
-    """Regression: a 200-node subcritical random graph (one 111-node
-    component) needs 22 label-propagation rounds — beyond the old
-    max_iter=20, which made near_dup_clusters RAISE on a graph a few
-    hundred LSH pairs can produce.  Both algorithms must converge and
-    agree; the python simulation of the same update rule pins the
-    round count the default must cover."""
-    import collections
-    import random as rnd
+@pytest.mark.parametrize("name", list(_CC_SHAPES))
+def test_near_dup_clusters_equals_union_find(spark, name):
+    """Every graph shape labels each endpoint with its component min,
+    exactly as a plain Python union-find does.  The shuffled-id path
+    and grid put each component across many Arrow batches, so they
+    need star-contraction rounds; the path is the shape on which
+    min-label propagation needed more than 50 rounds.  Self-loop-only
+    nodes label themselves."""
+    from hana_bq_beam_connector_spark.operators.dedup import near_dup_clusters
 
-    from hana_bq_beam_connector_spark.operators.dedup import (
-        cc_star,
-        near_dup_clusters,
-    )
+    edges = _CC_SHAPES[name]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r["node"]: r["label"] for r in near_dup_clusters(df).collect()}
+    assert got == _union_find_components(edges), name
 
-    rnd.seed(7)
-    edges = [(rnd.randrange(200), rnd.randrange(200)) for _ in range(150)]
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    a = sorted(map(tuple, cc_star(df).collect()))
-    b = sorted(map(tuple, near_dup_clusters(df).collect()))
-    assert a == b
 
-    # ground truth via union-find
-    parent = {}
+def test_near_dup_clusters_fixpoint_or_raise(spark):
+    """With one edge per Arrow batch the union-find pass contracts
+    nothing, so only star-contraction rounds can merge: the path
+    1-2-3 raises with no round allowed and converges with the default
+    budget, while a star is already a fixpoint and returns with no
+    round at all."""
+    from hana_bq_beam_connector_spark.operators.dedup import near_dup_clusters
 
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
+    def labels(edges, **kw):
+        df = spark.createDataFrame(edges, "id_a long, id_b long")
+        return {
+            r["node"]: r["label"]
+            for r in near_dup_clusters(df, **kw).collect()
+        }
 
-    for u, v in edges:
-        parent[find(u)] = find(v)
-    truth = collections.defaultdict(set)
-    for n in parent:
-        truth[find(n)].add(n)
-    want = sorted((n, min(truth[find(n)])) for n in parent)
-    assert a == want
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        with pytest.raises(RuntimeError):
+            labels([(1, 2), (2, 3)], max_iter=0)
+        assert labels([(1, 2), (2, 3)]) == {1: 1, 2: 1, 3: 1}
+        assert labels([(1, 2), (1, 3)], max_iter=0) == {1: 1, 2: 1, 3: 1}
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_ppm_parser_rejects_malformed_and_roundtrips():

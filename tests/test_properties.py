@@ -121,7 +121,7 @@ def _union_find_components(edges):
 )
 @given(edges=_edge_lists)
 def test_near_dup_clusters_match_union_find(spark, edges):
-    """Min-label propagation + pointer jumping equals a driver-side
+    """Batch union-find + star contraction equals a plain Python
     union-find on random graphs — including chains, cycles,
     self-merging stars, and multi-edge duplicates."""
     from hana_bq_beam_connector_spark.operators.dedup import (
@@ -172,12 +172,11 @@ def test_cms_never_undercounts(spark, keys):
 
 
 def test_near_dup_clusters_deep_chain(spark):
-    """A 60-node path needs 60 rounds under plain min-label
-    propagation (the pre-fix code silently returned half-merged
-    labels past max_iter=20, and its uncheckpointed per-round plan
-    doubled until the driver OOMed stringifying it); pointer jumping
-    + localCheckpoint converge it in ~log2(60) rounds with a flat
-    plan."""
+    """A 61-node path: the shape that needs 60 rounds under plain
+    min-label propagation (an earlier version silently returned
+    half-merged labels past max_iter=20).  Every node must get the
+    path's minimum, whether the batch union-find closes the path or
+    star-contraction rounds merge the pieces."""
     from hana_bq_beam_connector_spark.operators.dedup import (
         near_dup_clusters,
     )
