@@ -152,8 +152,7 @@ _SPREAD_MEMO_MAX = 1024
 # parallelism × floor and the stage keeps every core.  Callers whose
 # per-row work runs in the JVM (codegen'd hash folds) do NOT pass a
 # floor — a JVM task's fixed cost is ~1 ms, so full width stays free
-# for them.  Conf-overridable (spark.graft.spread.minBytesPerTask) —
-# a real cluster with slower task dispatch would raise it.
+# for them.
 _SPREAD_PY_MIN_BYTES_PER_TASK = 16 * 1024
 
 
@@ -168,12 +167,6 @@ def _spread_width(
     if min_bytes_per_task is None:
         return parallelism
     try:
-        min_bytes = int(
-            df.sparkSession.conf.get(
-                "spark.graft.spread.minBytesPerTask",
-                str(min_bytes_per_task),
-            )
-        )
         raw = (
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
@@ -182,15 +175,13 @@ def _spread_width(
         size = raw if isinstance(raw, int) else int(str(raw))
     except Exception:
         return parallelism
-    if size <= 0 or min_bytes <= 0:
+    if size <= 0 or min_bytes_per_task <= 0:
         return parallelism
-    return max(1, min(parallelism, -(-size // min_bytes)))
+    return max(1, min(parallelism, -(-size // min_bytes_per_task)))
 
 
 def spread(
-    df: DataFrame,
-    n_input_partitions: int | None = None,
-    min_bytes_per_task: int | None = None,
+    df: DataFrame, min_bytes_per_task: int | None = None
 ) -> DataFrame:
     """Round-robin repartition to cluster parallelism before CPU-heavy
     per-row work (hashing, vector folds) — but ONLY when the input is
@@ -209,18 +200,10 @@ def spread(
     similarity plans free of the round-robin Exchange (asserted in
     tests/test_plan_audit.py).
 
-    ``n_input_partitions``: caller hint that skips the probe entirely
-    when the caller already knows the scan width.  Without it, the
-    probe result is memoized per analyzed plan (one physical-planning
-    pass per distinct plan per session instead of per call)."""
-    sc = df.sparkSession.sparkContext
-    parallelism = sc.defaultParallelism
-    n = n_input_partitions
-    if n is not None:
-        if n >= parallelism:
-            return df
-        width = _spread_width(df, parallelism, min_bytes_per_task)
-        return df if n >= width else df.repartition(width)
+    The partition probe and the width are memoized per (analyzed plan,
+    floor): one physical-planning pass per distinct plan per session
+    instead of per call."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     try:
         # Keyed on (plan, floor): the same pruned scan may be spread
         # by a Python-stage caller (floored width) and a JVM caller

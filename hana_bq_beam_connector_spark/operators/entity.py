@@ -5,8 +5,9 @@ exist only WITHIN a block, so connected components can never span
 blocks — transitive closure is a per-block-local problem, not a
 global-graph one.  When blocks are small (bounded by attribute
 vocabulary, not by row count), the right plan is ONE shuffle on the
-block key and an exact union-find inside each Arrow batch, instead of
-an O(log diameter)-round iterative join algorithm whose per-round job
+block key and an exact union-find inside each block (one grouped-map
+pass that labels every input row with its component), instead of an
+O(log diameter)-round iterative join algorithm whose per-round job
 overhead dominates at any scale.
 
 The general operator (`operators/dedup.py near_dup_clusters`) serves
@@ -17,10 +18,9 @@ batch, then star-contraction rounds across batches.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def _within_edit(a: str, b: str, k: int) -> bool:
@@ -120,15 +120,16 @@ def blocked_fuzzy_components(
     max_edit: int,
     max_block_nodes: int = 100_000,
 ) -> DataFrame:
-    """(node, label) components of the within-block fuzzy-match graph.
+    """``nodes`` plus a ``label`` column: the component of each node in
+    the within-block fuzzy-match graph.
 
     ``nodes`` must be one row per distinct (block, name) — typically
     the output of a vocabulary contraction (groupBy block+name with
     min-id as the node id).  Inside each block an exact union-find
-    links names at Levenshtein <= ``max_edit``; only nodes with at
-    least one edge are emitted (matching the iterative operator's
-    contract: singletons are trivially their own cluster and stay
-    out of the state).  Labels are the component-minimum node id.
+    links names at Levenshtein <= ``max_edit``.  EVERY input row is
+    emitted, its other columns unchanged; ``label`` is the
+    component-minimum node id, so a node with no edge labels itself
+    and the caller filters on component size as it needs.
 
     Scale: one hash shuffle on the block key; per-block work is
     O(b² · len²) with b bounded by the name VOCABULARY inside a block
@@ -140,9 +141,13 @@ def blocked_fuzzy_components(
     back to the iterative operator.  Silent quadratic death is the
     failure mode; a named error is the mitigation.
     """
-    out_schema = "node bigint, label bigint"
+    # A new StructType: nodes.schema.add would mutate the frame's
+    # cached schema object.
+    out_schema = StructType(
+        [*nodes.schema.fields, StructField("label", LongType())]
+    )
 
-    def resolve(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+    def resolve(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[id_col].tolist()
         names = pdf[name_col].tolist()
         n = len(ids)
@@ -162,33 +167,17 @@ def blocked_fuzzy_components(
                 x = parent[x]
             return x
 
-        has_edge = [False] * n
         for i in range(n):
             for j in range(i + 1, n):
                 if _within_edit(names[i], names[j], max_edit):
-                    has_edge[i] = has_edge[j] = True
                     ri, rj = find(i), find(j)
                     if ri != rj:
                         parent[rj] = ri
-        if not any(has_edge):
-            return
         roots: dict[int, int] = {}
         for i in range(n):
-            if has_edge[i]:
-                r = find(i)
-                roots[r] = min(roots.get(r, ids[i]), ids[i])
-        yield pd.DataFrame(
-            {
-                "node": [ids[i] for i in range(n) if has_edge[i]],
-                "label": [roots[find(i)] for i in range(n) if has_edge[i]],
-            }
-        )
-
-    def wrapped(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = list(resolve(pdf))
-        if not frames:
-            return pd.DataFrame({"node": [], "label": []}).astype("int64")
-        return frames[0]
+            r = find(i)
+            roots[r] = min(roots.get(r, ids[i]), ids[i])
+        return pdf.assign(label=[roots[find(i)] for i in range(n)])
 
     # No explicit repartition here (r11, measured): the callers'
     # block structure is vocabulary-bounded — the frame stays KB-sized
@@ -200,4 +189,4 @@ def blocked_fuzzy_components(
     # operator; CPU-dense grouped maps whose input GROWS with the
     # corpus (udf_grouped_map_demean) do the opposite — see
     # queries/udfs.py.
-    return nodes.groupBy(*block_cols).applyInPandas(wrapped, out_schema)
+    return nodes.groupBy(*block_cols).applyInPandas(resolve, out_schema)

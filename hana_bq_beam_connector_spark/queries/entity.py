@@ -17,10 +17,12 @@ Scale design (identical discipline to operators/dedup.py):
 * the self-join carries only (key, id, name) — verification needs the
   name anyway, everything else stays behind until after the verify
   filter;
-* clustering is an exact union-find inside each block, fused with the
-  fuzzy verify (`operators/entity.py` blocked_fuzzy_components): blocked
-  edges cannot span blocks, so one grouped-map pass closes every
-  component and no iterative rounds run.
+* clustering runs over distinct (brand, name) nodes, not rows: an
+  exact union-find inside each block, fused with the fuzzy verify
+  (`operators/entity.py` blocked_fuzzy_components).  Blocked edges
+  cannot span blocks, so one grouped-map pass labels every name with
+  its component and no iterative rounds run; the labels broadcast back
+  over one row scan.
 """
 
 from __future__ import annotations
@@ -28,9 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hana_bq_beam_connector_spark.operators._common import (
-    pin_until_release,
-)
 from hana_bq_beam_connector_spark.operators.entity import (
     blocked_fuzzy_components,
 )
@@ -54,13 +53,19 @@ _DUCK_PAIRS_CTE = f"""pr AS (
     )"""
 
 
-def _er_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load_table(spark, sf_dir, "part").select(
+def _parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The `part` projection both ER queries block on: (id, name,
+    brand, noun = last word of the name)."""
+    return load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
         "p_brand",
         F.element_at(F.split(F.col("p_name"), " "), -1).alias("noun"),
     )
+
+
+def _er_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    p = _parts(spark, sf_dir)
     a = p.select(
         F.col("p_partkey").alias("id_a"),
         F.col("p_name").alias("name_a"),
@@ -137,75 +142,43 @@ def er_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(brand, name) are lev-0 edges, so the part-level components are "
     "exactly the name-level components expanded — matching runs over "
     "distinct (brand, name) nodes (vocabulary-sized: thousands), "
-    "never over rows (corpus-sized: billions), and the name→cluster "
-    "map broadcasts back over one row scan.  Closure itself exploits "
-    "that blocked edges can't span blocks: an exact per-block "
+    "never over rows (corpus-sized: billions).  An exact per-block "
     "union-find in ONE applyInPandas pass "
-    "(operators/entity.py blocked_fuzzy_components) replaces the "
-    "O(log diameter)-round iterative join loop whose per-round job "
-    "overhead dominates on vocabulary-sized graphs.  Measured at "
-    "sf0.1: 31.8 s row-level iterative → 13.1 s name-level iterative "
-    "→ ~3 s name-level union-find.  The oracle replays the ROW-level "
-    "recursive-CTE walk, so the driver gate proves both contractions "
-    "are lossless.",
+    "(operators/entity.py blocked_fuzzy_components) labels every name "
+    "with its component minimum; the labels broadcast back over one "
+    "row scan, and components of at least 2 rows are the entities "
+    "(a part is in a pair iff its name has a fuzzy neighbour or its "
+    "(brand, name) is shared by another row).  The oracle replays the "
+    "ROW-level recursive-CTE walk, so the driver gate proves both "
+    "contractions are lossless.",
 )
 def er_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey",
-        "p_name",
-        "p_brand",
-        F.element_at(F.split(F.col("p_name"), " "), -1).alias("noun"),
-    )
+    p = _parts(spark, sf_dir)
     # Name-level nodes: one row per distinct (brand, name); node id =
     # min partkey carrying that name (ids stay partkeys, so component
     # labels remain "min member id" exactly as in the row-level graph).
-    # names feeds three branches (the union-find input, the singles
-    # anti-join probe, and the name→label map) and linked feeds two
-    # (anti-join build + the map union) — without a pin the whole
-    # applyInPandas union-find lineage re-evaluates once per
-    # consumer (stage profile r11 s4: the two heaviest stages of the
-    # query were both the Python verify, run twice).  Both frames are
-    # vocabulary-sized — thousands of rows — so the pin is a few KB;
-    # pin_until_release because the consumers are lazy until the
-    # caller materializes the returned frame (guide §5).
-    names = pin_until_release(
-        p.groupBy("p_brand", "noun", "p_name").agg(
-            F.min("p_partkey").alias("node_id"),
-            F.count(F.lit(1)).alias("n_parts"),
-        )
+    names = p.groupBy("p_brand", "noun", "p_name").agg(
+        F.min("p_partkey").alias("node_id")
     )
-    linked = pin_until_release(
-        blocked_fuzzy_components(
-            names,
-            block_cols=["p_brand", "noun"],
-            id_col="node_id",
-            name_col="p_name",
-            max_edit=_MAX_EDIT,
-        )
-    )
-    # Row-level pair membership = name-level edge OR ≥2 rows sharing
-    # the name (their lev-0 self-edges).  Edge-less multi-row names
-    # are their own cluster.
-    singles = names.where(F.col("n_parts") >= 2).join(
-        linked.select(F.col("node").alias("node_id")), "node_id", "left_anti"
-    ).select(
-        F.col("node_id").alias("node"), F.col("node_id").alias("label")
-    )
-    name_labels = linked.unionByName(singles)
-    name_map = names.join(
-        name_labels, names.node_id == name_labels.node, "inner"
+    name_labels = blocked_fuzzy_components(
+        names,
+        block_cols=["p_brand", "noun"],
+        id_col="node_id",
+        name_col="p_name",
+        max_edit=_MAX_EDIT,
     ).select("p_brand", "p_name", "label")
     # The map is vocabulary-sized → broadcasts; the row table never
     # shuffles.
-    members = p.join(
-        F.broadcast(name_map), ["p_brand", "p_name"], "inner"
+    ents = (
+        p.join(F.broadcast(name_labels), ["p_brand", "p_name"], "inner")
+        .groupBy(F.col("label").alias("entity_id"))
+        .agg(F.count(F.lit(1)).alias("n_members"))
+        .where(F.col("n_members") >= 2)
     )
-    ents = members.groupBy(F.col("label").alias("entity_id")).agg(
-        F.count(F.lit(1)).alias("n_members")
+    canon = p.select(
+        F.col("p_partkey").alias("entity_id"),
+        F.col("p_name").alias("canonical_name"),
     )
-    canon = load_table(spark, sf_dir, "part").select(
-        "p_partkey", F.col("p_name").alias("canonical_name")
+    return ents.join(canon, "entity_id", "inner").select(
+        "entity_id", "n_members", "canonical_name"
     )
-    return ents.join(
-        canon, ents.entity_id == canon.p_partkey, "inner"
-    ).select("entity_id", "n_members", "canonical_name")

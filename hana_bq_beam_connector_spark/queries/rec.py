@@ -413,6 +413,7 @@ def rec_user_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
+    # Pinned before the pool so both futures read it, not race to build it.
     b = _baskets(spark, sf_dir)
     # owned rides the pinned basket frame (r11): join orders to the
     # per-order item array and explode, instead of re-scanning

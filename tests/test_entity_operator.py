@@ -3,11 +3,14 @@ union-find closure (operators/entity.py).  The query-level oracle
 (er_entity_clusters vs the row-level recursive CTE) proves one
 dataset; these prove the operator's contract on adversarial shapes:
 chains (transitivity beyond direct edges), cross-block isolation,
-singleton exclusion, and equivalence with the iterative
-min-label-propagation operator on a randomized graph.
+edge-less nodes labelling themselves, input columns passing through,
+and equivalence with the general connected-components operator on a
+randomized graph.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -64,7 +67,7 @@ def _run(spark, rows, max_edit=2):
         name_col="name",
         max_edit=max_edit,
     )
-    return {(r["node"], r["label"]) for r in out.collect()}
+    return {(r["node_id"], r["label"]) for r in out.collect()}
 
 
 def test_levenshtein_matches_spark(spark):
@@ -100,22 +103,46 @@ def test_cross_block_isolation(spark):
     assert got == {(1, 1), (2, 1), (3, 3), (4, 3)}
 
 
-def test_singletons_excluded(spark):
+def test_singletons_label_themselves(spark):
     rows = [
         ("k", 1, "aa"), ("k", 2, "ab"),
         ("k", 9, "zzzzzz"),  # no neighbor within 1 edit
     ]
     got = _run(spark, rows, max_edit=1)
-    assert got == {(1, 1), (2, 1)}
-    # Entire edge-less block → nothing emitted for it.
-    rows2 = rows + [("lonely", 50, "qq")]
-    assert _run(spark, rows2, max_edit=1) == got
+    assert got == {(1, 1), (2, 1), (9, 9)}
+    # An entire edge-less block: every node is its own component.
+    rows2 = rows + [("lonely", 50, "qq"), ("lonely", 51, "zzzz")]
+    assert _run(spark, rows2, max_edit=1) == got | {(50, 50), (51, 51)}
+
+
+def test_input_columns_pass_through(spark):
+    """Every input row comes back with its columns unchanged, plus
+    ``label``; the input frame's schema object is not mutated."""
+    nodes = spark.createDataFrame(
+        [("k", 3, "aa", "x"), ("k", 1, "ab", None), ("j", 7, "aa", "z")],
+        "block string, node_id bigint, name string, extra string",
+    )
+    before = nodes.schema.fieldNames()
+    out = blocked_fuzzy_components(
+        nodes,
+        block_cols=["block"],
+        id_col="node_id",
+        name_col="name",
+        max_edit=1,
+    )
+    assert out.schema.fieldNames() == before + ["label"]
+    assert nodes.schema.fieldNames() == before
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("j", 7, "aa", "z", 7),
+        ("k", 1, "ab", None, 1),
+        ("k", 3, "aa", "x", 1),
+    ]
 
 
 def test_equivalence_with_iterative_operator(spark):
     """Random multi-block name sets: the per-block union-find must
-    produce exactly the components the iterative min-label operator
-    finds on the explicit pair list (deterministic pseudo-random
+    produce exactly the components the general operator
+    (near_dup_clusters) finds on the explicit pair list (deterministic pseudo-random
     inputs — fixed generator, no RNG state)."""
     alphabet = "abcd"
     rows = []
@@ -135,15 +162,18 @@ def test_equivalence_with_iterative_operator(spark):
     distinct = nodes.groupBy("block", "name").agg(
         F.min("node_id").alias("node_id")
     )
+    labelled = blocked_fuzzy_components(
+        distinct,
+        block_cols=["block"],
+        id_col="node_id",
+        name_col="name",
+        max_edit=2,
+    ).collect()
+    # near_dup_clusters leaves singletons out: compare the operator's
+    # nodes whose component has at least 2 members.
+    sizes = Counter(r["label"] for r in labelled)
     got = {
-        (r["node"], r["label"])
-        for r in blocked_fuzzy_components(
-            distinct,
-            block_cols=["block"],
-            id_col="node_id",
-            name_col="name",
-            max_edit=2,
-        ).collect()
+        (r["node_id"], r["label"]) for r in labelled if sizes[r["label"]] >= 2
     }
 
     a = distinct.select(
@@ -186,3 +216,16 @@ def test_giant_block_raises_instead_of_quadratic_death(spark):
             max_edit=1,
             max_block_nodes=10,
         ).collect()
+
+
+def test_er_entity_clusters_builds_without_pins(spark):
+    """Building the query runs no eager pin: the operator labels every
+    name node, so no frame feeds more than one lazy branch and nothing
+    is persisted while the plan is built."""
+    from hana_bq_beam_connector_spark.queries import registry
+    from tests.conftest import SF_DIR
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    registry()["er_entity_clusters"].fn(spark, SF_DIR)
+    assert jsc.getPersistentRDDs().size() == before
